@@ -1,0 +1,22 @@
+package perfbench
+
+/** Minimal JSON rendering for the result line and span files. */
+object Json {
+  def str(s: String): String =
+    "\"" + s.flatMap {
+      case '"' => "\\\""
+      case '\\' => "\\\\"
+      case '\n' => "\\n"
+      case c if c < ' ' => f"\\u${c.toInt}%04x"
+      case c => c.toString
+    } + "\""
+
+  /** Full-precision number; non-finite values have no JSON form. */
+  def num(v: Double): String = {
+    require(!v.isNaN && !v.isInfinite, s"non-finite metric value $v")
+    if (v == math.rint(v) && math.abs(v) < 1e15) v.toLong.toString else v.toString
+  }
+
+  def obj(fields: Seq[(String, String)]): String =
+    fields.map { case (k, v) => str(k) + ":" + v }.mkString("{", ",", "}")
+}
