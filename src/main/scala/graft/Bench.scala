@@ -287,7 +287,11 @@ object Bench {
     // find the bare JSON as the LAST line (14 rounds of parsed:null came
     // from sbt's [info] prefix + its [success] trailer; build.sbt now
     // passes forked stdout through verbatim and suppresses the trailer).
-    spark.stop()
+    // A throwing stop must not cost the contract line either.
+    try spark.stop()
+    catch { case scala.util.control.NonFatal(e) =>
+      System.err.println(s"[bench] spark.stop() failed: ${e.getMessage}")
+    }
     println(line)
     System.out.flush()
   }

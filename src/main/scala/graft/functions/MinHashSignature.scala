@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
@@ -25,17 +25,6 @@ case class MinHashSignature(child: Expression, numPerm: Int)
   @transient private lazy val digest =
     java.security.MessageDigest.getInstance("MD5")
 
-  private val M = (1L << 61) - 1
-
-  /** (a·h) mod 2^61−1 via 128-bit split multiply: 2^64 ≡ 8, 2^61 ≡ 1. */
-  @inline private def mulMod(a: Long, h: Long): Long = {
-    val hi = Math.multiplyHigh(a, h)
-    val lo = a * h
-    val r = hi * 8 + (lo >>> 61) + (lo & M)
-    val f = (r & M) + (r >>> 61)
-    if (f >= M) f - M else f
-  }
-
   override def nullSafeEval(input: Any): Any =
     compute(input.asInstanceOf[ArrayData])
 
@@ -47,37 +36,14 @@ case class MinHashSignature(child: Expression, numPerm: Int)
     // No shingles → no signature (null), mirroring list_min of an
     // empty list; never an array of nulls under containsNull=false.
     if (n == 0) return null
-    // one md5 per shingle: top 60 bits (7 bytes + high nibble of byte 7)
     val hs = new Array[Long](n)
     var i = 0
     while (i < n) {
-      digest.reset()
-      digest.update(arr.getUTF8String(i).getBytes)
-      val raw = digest.digest()
-      var h = 0L
-      var j = 0
-      while (j < 7) { h = (h << 8) | (raw(j) & 0xffL); j += 1 }
-      h = (h << 4) | ((raw(7) >> 4) & 0xfL)
-      hs(i) = h
+      val b = arr.getUTF8String(i).getBytes
+      hs(i) = MinHashSignature.fingerprint(digest, b, 0, b.length)
       i += 1
     }
-    val mins = new Array[Any](numPerm)
-    var p = 0
-    while (p < numPerm) {
-      val a = 2L * p * 2654435761L + 1
-      val b = p.toLong * 40503 + 7
-      var best = Long.MaxValue
-      i = 0
-      while (i < n) {
-        var v = mulMod(a, hs(i)) + b
-        if (v >= M) v -= M
-        if (v < best) best = v
-        i += 1
-      }
-      mins(p) = best
-      p += 1
-    }
-    new GenericArrayData(mins)
+    MinHashSignature.permMins(hs, n, numPerm)
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
@@ -92,6 +58,54 @@ case class MinHashSignature(child: Expression, numPerm: Int)
   override def nullable: Boolean = true // null for empty shingle arrays
   override protected def withNewChildInternal(c: Expression): Expression = copy(child = c)
   override def prettyName: String = "graft_minhash_signature"
+}
+
+object MinHashSignature {
+  private val M = (1L << 61) - 1
+
+  /** h(s): the top 60 bits of md5 over `len` bytes at `off` (7 bytes +
+    * the high nibble of byte 7) — one md5 per shingle. */
+  def fingerprint(digest: java.security.MessageDigest,
+      bytes: Array[Byte], off: Int, len: Int): Long = {
+    digest.reset()
+    digest.update(bytes, off, len)
+    val raw = digest.digest()
+    var h = 0L
+    var j = 0
+    while (j < 7) { h = (h << 8) | (raw(j) & 0xffL); j += 1 }
+    (h << 4) | ((raw(7) >> 4) & 0xfL)
+  }
+
+  /** (a·h) mod 2^61−1 via 128-bit split multiply: 2^64 ≡ 8, 2^61 ≡ 1. */
+  @inline private def mulMod(a: Long, h: Long): Long = {
+    val hi = Math.multiplyHigh(a, h)
+    val lo = a * h
+    val r = hi * 8 + (lo >>> 61) + (lo & M)
+    val f = (r & M) + (r >>> 61)
+    if (f >= M) f - M else f
+  }
+
+  /** Signature element p = min over the first `n` fingerprints of
+    * v_p(h). Repeated fingerprints leave every minimum unchanged. */
+  def permMins(hs: Array[Long], n: Int, numPerm: Int): ArrayData = {
+    val mins = new Array[Long](numPerm)
+    var p = 0
+    while (p < numPerm) {
+      val a = 2L * p * 2654435761L + 1
+      val b = p.toLong * 40503 + 7
+      var best = Long.MaxValue
+      var i = 0
+      while (i < n) {
+        var v = mulMod(a, hs(i)) + b
+        if (v >= M) v -= M
+        if (v < best) best = v
+        i += 1
+      }
+      mins(p) = best
+      p += 1
+    }
+    UnsafeArrayData.fromPrimitiveArray(mins)
+  }
 }
 
 /** LSH band keys, fused (r15, guide §4): exactly

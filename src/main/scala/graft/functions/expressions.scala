@@ -561,7 +561,11 @@ case class AsciiClassOutRatio(child: Expression, classRegex: String)
       }
       i += 1
     }
-    outC.toDouble / chars
+    // Only continuation bytes (never 0/0 = NaN): the regex form counts
+    // each as one char and sees each as one U+FFFD — out of the class
+    // unless the class is negated.
+    if (chars == 0) { if (nonAsciiAllowed) 0.0d else 1.0d }
+    else outC.toDouble / chars
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
@@ -578,8 +582,9 @@ case class AsciiClassOutRatio(child: Expression, classRegex: String)
 object AsciiClassOutRatio {
   /** Parse `[...]` / `[^...]` of literal ASCII chars and simple ranges
     * into (allowed-ASCII table, non-ASCII-allowed). None for anything
-    * with escapes, nested classes, or non-ASCII — those callers keep
-    * the regex path. */
+    * with escapes, nested classes, `&` (a `&&` intersection such as
+    * `[a-z&&[^aeiou]]`), or non-ASCII — those callers keep the regex
+    * path. */
   def parse(re: String): Option[(Array[Boolean], Boolean)] = {
     if (re.length < 3 || re.charAt(0) != '[' || re.last != ']') return None
     var body = re.substring(1, re.length - 1)
@@ -590,7 +595,7 @@ object AsciiClassOutRatio {
     var i = 0
     while (i < body.length) {
       val c = body.charAt(i)
-      if (c >= 128 || c == '\\' || c == '[' || c == ']') return None
+      if (c >= 128 || c == '\\' || c == '[' || c == ']' || c == '&') return None
       if (i + 2 < body.length && body.charAt(i + 1) == '-') {
         val d = body.charAt(i + 2)
         if (d >= 128 || d == '\\' || d < c) return None

@@ -12,11 +12,28 @@ import org.apache.spark.sql.functions._
   * of one per (perm, shingle); exact integer arithmetic keeps oracle
   * parity (DuckDB replays it with HUGEINT modulo).
   *
-  * Scale design: signatures/bands are per-row HOF computations (no
-  * shuffle); candidate generation is a self-equi-join on
-  * (band_index, band_key) — the only shuffles are the band exchange and
-  * the pair dedup. Bucket skew (a viral shingle set) is handled by AQE
-  * skew-join splitting; nothing ever collects to the driver.
+  * Shingle sketches ([[candidatePairs]], [[candidatePairsFromSets]]):
+  * a document's word-shingle set travels as a [[sketch]] — one
+  * `array<long>` of (fp, pos) pairs sorted by fp, where fp is the same
+  * 60-bit h(s) and pos packs the (start, byte length) of the shingle's
+  * slice of the text — next to the text itself, never as shingle
+  * strings. Contract:
+  *   - [[sketchSignature]] over the sketch is bit-identical to
+  *     [[signature]] over `Text.shingleSet(text, n)`, so bands (and the
+  *     persisted [[lshState]] buckets) line up with the string form.
+  *   - Verification is EXACT: [[sketchJaccard]] merges the two fp
+  *     arrays and confirms every equal-fp run by comparing the text
+  *     bytes, so the `jaccard` column is the same integer ratio
+  *     `Text.jaccard` gives over the shingle strings (and the DuckDB
+  *     oracles replay) even under a 60-bit fingerprint collision.
+  *   - Invalid UTF-8 behaves as in the string path (tokens come from
+  *     the text's Java-String round trip).
+  * A sketch costs 16 B per distinct shingle plus the text it indexes.
+  *
+  * Scale design: signatures/bands are per-row computations (no
+  * shuffle); candidate generation is bucket-local (see [[Buckets]]) —
+  * the only shuffles are the bucket exchange, the pair dedup and the
+  * two verify joins. No step collects rows to one machine.
   */
 object MinHash {
 
@@ -27,6 +44,26 @@ object MinHash {
     org.apache.spark.sql.graft.bridge.column(
       graft.functions.MinHashSignature(
         org.apache.spark.sql.graft.bridge.expression(shingles), numPerm))
+
+  /** Shingle sketch of a text column: see the object doc and
+    * [[graft.functions.ShingleSketch]]. */
+  def sketch(text: Column, shingleSize: Int): Column =
+    org.apache.spark.sql.graft.bridge.column(
+      graft.functions.ShingleSketch(
+        org.apache.spark.sql.graft.bridge.expression(text), shingleSize))
+
+  /** [[signature]] over a [[sketch]] (bit-identical, no md5). */
+  def sketchSignature(sk: Column, numPerm: Int): Column =
+    org.apache.spark.sql.graft.bridge.column(
+      graft.functions.SketchSignature(
+        org.apache.spark.sql.graft.bridge.expression(sk), numPerm))
+
+  /** Exact shingle-set Jaccard of two texts from their sketches. */
+  def sketchJaccard(skA: Column, textA: Column, skB: Column, textB: Column): Column = {
+    import org.apache.spark.sql.graft.bridge.expression
+    org.apache.spark.sql.graft.bridge.column(graft.functions.SketchJaccard(
+      expression(skA), expression(textA), expression(skB), expression(textB)))
+  }
 
   /** LSH band keys: md5 over each `rowsPerBand`-slice of the signature
     * (long values concatenated in decimal, same as the oracle's
@@ -46,8 +83,8 @@ object MinHash {
             v => v.cast("string")), ""))))
 
   /** Candidate near-duplicate pairs (idA < idB) sharing ≥1 LSH band,
-    * with exact Jaccard computed on the shingle sets and filtered to
-    * `threshold`. Input: df with (idCol: long, textCol: string).
+    * with the exact shingle-set Jaccard (see the object doc) filtered
+    * to `threshold`. Input: df with (idCol: long, textCol: string).
     *
     * Pair generation is bucket-local: group by (band, key), emit pairs
     * inside each bucket — the signature/band computation runs exactly
@@ -67,31 +104,30 @@ object MinHash {
       threshold: Double = 0.5,
       maxBucket: Int = 1000,
       blockCols: Seq[String] = Nil): DataFrame = {
-    val rowsPerBand = numPerm / bands
-    require(bands * rowsPerBand == numPerm, "bands must divide numPerm")
-
+    require(numPerm % bands == 0, "bands must divide numPerm")
     // Materialized once: the banding path AND both exact-verify join
-    // sides consume the shingle sets — without this the scan + shingle
-    // extraction executes three times per run. localCheckpoint (executor
-    // block storage, lineage cut) over persist() keeps the downstream
-    // plan free of InMemoryRelation re-prints; the repo-wide caveat
-    // (block loss fails the job instead of recomputing) applies.
-    val withSets = df
-      .select((col(idCol).as("id") +: Text.shingleSet(col(textCol), shingleSize).as("sh")
-        +: blockCols.map(col)): _*)
-      .filter(size(col("sh")) > 0)
+    // sides consume the sketches — without this the scan + sketch build
+    // executes three times per run. localCheckpoint (executor block
+    // storage, lineage cut) over persist() keeps the downstream plan
+    // free of InMemoryRelation re-prints; the repo-wide caveat (block
+    // loss fails the job instead of recomputing) applies.
+    val sets = df
+      .select((col(idCol).as("id") +: col(textCol).as("text")
+        +: sketch(col(textCol), shingleSize).as("sk") +: blockCols.map(col)): _*)
+      .filter(size(col("sk")) > 0)
       .localCheckpoint()
-    candidatePairsFromSets(withSets, numPerm, bands, threshold, maxBucket,
+    candidatePairsFromSets(sets, numPerm, bands, threshold, maxBucket,
       blockCols)
   }
 
-  /** [[candidatePairs]] over ALREADY-MATERIALIZED (id, sh [, blockCols])
-    * shingle sets (r15): a caller that must checkpoint its input anyway
-    * (the pipeline's fuzzy stage materializes the funnel output for its
-    * final anti-join) can carry the shingle column in that ONE
-    * checkpoint instead of paying a second materialization barrier
-    * here. `sets` must be cheap to re-scan (checkpointed/parquet): the
-    * banding path and both verify join sides each consume it. */
+  /** [[candidatePairs]] over ALREADY-MATERIALIZED (id, text, sk
+    * [, blockCols]) rows, `sk` the non-empty [[sketch]] of `text`: a
+    * caller that must checkpoint its input anyway (the pipeline's fuzzy
+    * stage materializes the funnel output for its final anti-join) can
+    * carry the sketch in that ONE checkpoint instead of paying a second
+    * materialization barrier here. `sets` must be cheap to re-scan
+    * (checkpointed/parquet): the banding path and both verify join
+    * sides each consume it. */
   def candidatePairsFromSets(
       sets: DataFrame,
       numPerm: Int = 32,
@@ -101,10 +137,9 @@ object MinHash {
       blockCols: Seq[String] = Nil): DataFrame = {
     val rowsPerBand = numPerm / bands
     require(bands * rowsPerBand == numPerm, "bands must divide numPerm")
-    val withSets = sets
 
-    val banded = withSets
-      .withColumn("sig", signature(col("sh"), numPerm))
+    val banded = sets
+      .withColumn("sig", sketchSignature(col("sk"), numPerm))
       .select((col("id") +:
         posexplode(bandKeys(col("sig"), bands, rowsPerBand)).as(Seq("band", "key"))
         +: blockCols.map(col)): _*)
@@ -119,10 +154,13 @@ object MinHash {
     val pairs = Buckets.pairs(banded, blockCols ++ Seq("band", "key"), "id",
       maxBucket = maxBucket)
 
+    def side(s: String) =
+      sets.select(col("id").as(s"id_$s"), col("text").as(s"text_$s"), col("sk").as(s"sk_$s"))
     pairs
-      .join(withSets.select(col("id").as("id_a"), col("sh").as("sh_a")), Seq("id_a"))
-      .join(withSets.select(col("id").as("id_b"), col("sh").as("sh_b")), Seq("id_b"))
-      .withColumn("jaccard", Text.jaccard(col("sh_a"), col("sh_b")))
+      .join(side("a"), Seq("id_a"))
+      .join(side("b"), Seq("id_b"))
+      .withColumn("jaccard",
+        sketchJaccard(col("sk_a"), col("text_a"), col("sk_b"), col("text_b")))
       .filter(col("jaccard") >= threshold)
       .select(col("id_a"), col("id_b"), col("jaccard"))
   }

@@ -213,22 +213,21 @@ class Pipeline(spark: SparkSession, cfg: PipelineConfig) {
       // anti-join consume `df`, and without this the whole upstream
       // clean→stats→flag→window chain executes TWICE per run. Under
       // checkpointRoot the input is already a parquet re-read.
-      // r15: the ONE checkpoint also carries the shingle sets (the
-      // `_sh` column), so MinHash's pair build reads them instead of
-      // paying its own second materialization barrier — one checkpoint
-      // job and one funnel-output scan fewer per run; `_sh` is dropped
-      // before the stage returns, so the output schema is unchanged.
+      // The ONE checkpoint also carries the shingle sketch (`_sk`, 16 B
+      // per shingle beside the text it indexes), so MinHash's pair build
+      // reads it instead of paying its own second materialization
+      // barrier; `_sk` is dropped before the stage returns, so the
+      // output schema is unchanged.
       val mat0 =
         if (cfg.checkpointRoot.isEmpty)
-          df.withColumn("_sh", graft.ops.Text.shingleSet($"text", 3))
-            .localCheckpoint()
+          df.withColumn("_sk", MinHash.sketch($"text", 3)).localCheckpoint()
         else df
-      val mat = if (cfg.checkpointRoot.isEmpty) mat0.drop("_sh") else mat0
+      val mat = if (cfg.checkpointRoot.isEmpty) mat0.drop("_sk") else mat0
       val pairs =
         if (cfg.checkpointRoot.isEmpty)
           MinHash.candidatePairsFromSets(
-            mat0.select($"doc_id".as("id"), $"_sh".as("sh"))
-              .filter(org.apache.spark.sql.functions.size($"sh") > 0),
+            mat0.select($"doc_id".as("id"), $"text", $"_sk".as("sk"))
+              .filter(org.apache.spark.sql.functions.size($"sk") > 0),
             threshold = cfg.minhashThreshold)
         else MinHash.candidatePairs(mat, "doc_id", "text",
           threshold = cfg.minhashThreshold)

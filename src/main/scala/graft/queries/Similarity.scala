@@ -75,8 +75,12 @@ object Similarity {
     // max coarse bucket 178 vs cap 1000, and refined buckets are ~L×
     // smaller still) — and the pair explosion, dedup exchange, payload
     // joins and cosine pass all run on ~1/L of the rows (L≈10 labels).
-    Vectors.neardupVerify(emb,
-        Vectors.neardupCandidatesBy(emb, Seq("label")), threshold)
+    // A null label equals nothing under the verify's `=` (and the
+    // oracle's join), but a null bucket-key component groups with other
+    // nulls — unlabelled vectors leave before bucketing.
+    val labelled = emb.filter(col("label").isNotNull)
+    Vectors.neardupVerify(labelled,
+        Vectors.neardupCandidatesBy(labelled, Seq("label")), threshold)
       .select(col("id_a"), col("id_b"))
   }
 

@@ -2,9 +2,10 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.ops.{ConnectedComponents, MinHash, SimHash, Text}
+import graft.ops.{Buckets, ConnectedComponents, MinHash, SimHash, Text}
 
 class DedupSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -23,6 +24,50 @@ class DedupSpec extends AnyFunSuite {
       shingleSize = 3, numPerm = 32, bands = 8, threshold = 0.5)
       .select($"id_a", $"id_b").as[(Long, Long)].collect().toSet
     assert(pairs == Set((0L, 1L)))
+  }
+
+  /** The shingle-string LSH path `candidatePairs` ran before shingle
+    * sketches (string sets, their signature, hash-set Jaccard verify),
+    * as (id_a, id_b, jaccard) rows. */
+  private def stringPathPairs(docs: DataFrame, blockCols: Seq[String],
+      threshold: Double, maxBucket: Int): Set[(Long, Long, Double)] = {
+    val sets = docs
+      .select((col("doc_id").as("id") +: Text.shingleSet(col("text"), 3).as("sh")
+        +: blockCols.map(col)): _*)
+      .filter(size(col("sh")) > 0)
+    val banded = sets.withColumn("sig", MinHash.signature(col("sh"), 32))
+      .select((col("id") +: posexplode(MinHash.bandKeys(col("sig"), 8, 4)).as(Seq("band", "key"))
+        +: blockCols.map(col)): _*)
+    def side(s: String) = sets.select(col("id").as(s"id_$s"), col("sh").as(s"sh_$s"))
+    Buckets.pairs(banded, blockCols ++ Seq("band", "key"), "id", maxBucket)
+      .join(side("a"), Seq("id_a")).join(side("b"), Seq("id_b"))
+      .withColumn("jaccard", Text.jaccard(col("sh_a"), col("sh_b")))
+      .filter(col("jaccard") >= threshold)
+      .select("id_a", "id_b", "jaccard").as[(Long, Long, Double)].collect().toSet
+  }
+
+  test("sketch candidatePairs == the shingle-string path, with and without blockCols") {
+    val fixtures = Seq(
+      (0L, "g1", base), (1L, "g1", nearDup), (2L, "g1", distinct1),
+      (3L, "g2", base), (4L, "g2", base + " coda"), (5L, "g2", distinct2),
+      (6L, "g1", base + " extra"), (7L, "g2", nearDup), (8L, "g1", ""),
+      (9L, "g2", "too short")).toDF("doc_id", "grp", "text")
+    val sf = spark.read.parquet(s"${TestSpark.Sf}/documents.parquet")
+      .select($"doc_id", $"lang".as("grp"), $"text")
+    val cases = for {
+      (name, docs) <- Seq("fixtures" -> fixtures, "sf0.001" -> sf)
+      blocks <- Seq(Nil, Seq("grp"))
+      threshold <- Seq(0.0, 0.5)
+    } yield (name, docs, blocks, threshold, 1000)
+    for ((name, docs, blocks, threshold, cap) <-
+        cases :+ (("fixtures", fixtures, Nil, 0.5, 3))) {
+      val got = MinHash.candidatePairs(docs, "doc_id", "text", threshold = threshold,
+          maxBucket = cap, blockCols = blocks)
+        .as[(Long, Long, Double)].collect().toSet
+      val want = stringPathPairs(docs, blocks, threshold, cap)
+      assert(got == want, s"$name blockCols=$blocks threshold=$threshold maxBucket=$cap")
+      assert(want.nonEmpty, s"$name blockCols=$blocks threshold=$threshold")
+    }
   }
 
   test("incremental LSH state: parquet round trip, equals full recompute on batch pairs") {

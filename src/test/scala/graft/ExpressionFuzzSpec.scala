@@ -130,6 +130,21 @@ class ExpressionFuzzSpec extends AnyFunSuite {
       FROM fuzz""")
   }
 
+  test("fuzz shingle sketch expressions (Column DSL): codegen == interpreted") {
+    import graft.ops.MinHash
+    def df = {
+      val base = spark.read.parquet(fuzzPath)
+      base.select(col("t"), col("u"),
+        MinHash.sketch(col("t"), 3).as("sk3"), MinHash.sketch(col("u"), 1).as("sk1"),
+        MinHash.sketchSignature(MinHash.sketch(col("t"), 3), 8).as("sig"),
+        MinHash.sketchJaccard(MinHash.sketch(col("t"), 2), col("t"),
+          MinHash.sketch(col("u"), 2), col("u")).as("jac"))
+    }
+    val gen = collectWith(CodegenOnly)(df)
+    val int = collectWith(Interpreted)(df)
+    assert(gen == int, "shingle sketch expressions diverge between codegen and interpreted")
+  }
+
   test("fuzz vector expressions (Column DSL): codegen == interpreted") {
     import org.apache.spark.sql.graft.bridge
     def df = {

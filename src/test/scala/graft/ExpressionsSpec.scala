@@ -309,6 +309,26 @@ class ExpressionsSpec extends AnyFunSuite {
     assert(col.getAs[String]("rep") == r.getAs[String]("rep"))
   }
 
+  test("charClassOutRatio on continuation-only bytes == regex form, never NaN") {
+    import graft.ops.Text
+    val df = Seq(Array(0x80), Array(0x80, 0xbf, 0x80)).map(_.map(_.toByte))
+      .toDF("b").select($"b".cast("string").as("t"))
+    for (cls <- Seq("[a-z ]", "[^0-9]")) {
+      assert(graft.functions.AsciiClassOutRatio.parse(cls).isDefined, cls)
+      df.select(Text.charClassOutRatio($"t", cls), Text.charClassOutRatioRegex($"t", cls))
+        .as[(Double, Double)].collect().foreach { case (fused, regex) =>
+          assert(!fused.isNaN && fused == regex, s"class=$cls fused=$fused regex=$regex")
+        }
+    }
+  }
+
+  test("charClassOutRatio: an && intersection class stays on the regex path") {
+    import graft.ops.Text
+    assert(graft.functions.AsciiClassOutRatio.parse("[a&&b]").isEmpty)
+    // {a} ∩ {b} is empty, so every char is out of the class
+    assert(one[Double](Text.charClassOutRatio($"t", "[a&&b]"), "ab") == 1.0)
+  }
+
   test("graft_lang_name/graft_lang_code callable from SQL") {
     GraftFunctions.registerSql(spark)
     val r = spark.sql(

@@ -63,6 +63,18 @@ class GraphsSpec extends AnyFunSuite {
     info(s"hub wedge curve (k -> wedges): ${curve.mkString(", ")}")
   }
 
+  test("lshLabelEdges: null labels pair with nothing (the oracle's = join)") {
+    val rnd = new scala.util.Random(7)
+    val v = Seq.fill(64)(rnd.nextFloat() - 0.5f)
+    val w = Seq.fill(64)(rnd.nextFloat() - 0.5f)
+    val emb = Seq((1L, v, None), (2L, v, None), (3L, v, Some(4)), (4L, v, Some(4)),
+      (5L, w, None), (6L, w, Some(2)), (7L, w, Some(2)))
+      .toDF("vec_id", "embedding", "label")
+    val edges = graft.queries.Similarity.lshLabelEdges(emb, threshold = 0.35)
+      .as[(Long, Long)].collect().toSet
+    assert(edges == Set((3L, 4L), (6L, 7L)))
+  }
+
   test("e_modularity == brute Newman-Girvan Q over the same LP partition") {
     // independent recomputation: collect the LSH graph + LP labels the
     // query builds, compute Q per community driver-side with the same

@@ -48,6 +48,88 @@ class PropertiesSpec extends AnyFunSuite {
     assert(bad == 0)
   }
 
+  // Shingle-sketch pins: words from ASCII, the shipped Devanagari /
+  // Bengali / Tamil stopword lexicons, astral-plane codepoints, and a
+  // mix; small pools so shingles repeat inside a doc and overlap across
+  // docs; single and double spaces plus leading/trailing ones (empty
+  // tokens).
+  private lazy val sketchPools: Seq[Seq[String]] = {
+    import graft.sources.Lexicons
+    val pools = Seq(Seq("the", "a", "fox", "dog", "river", "x"),
+      Lexicons.stopwords("hindi").take(6), Lexicons.stopwords("bengali").take(6),
+      Lexicons.stopwords("tamil").take(6), Seq("𐍈", "𝔘𝔫𝔦", "😀x", "a𐌰b"))
+    pools :+ pools.flatMap(_.take(2))
+  }
+  private def sketchDocs(n: Int): Seq[String] = {
+    val g = for {
+      pool <- Gen.oneOf(sketchPools)
+      k <- Gen.choose(0, 16)
+      words <- Gen.listOfN(k, Gen.oneOf(pool))
+      seps <- Gen.listOfN(k, Gen.frequency(8 -> " ", 1 -> "  "))
+      lead <- Gen.frequency(4 -> "", 1 -> " ")
+      trail <- Gen.frequency(4 -> "", 1 -> " ")
+    } yield lead + words.zip(seps).map { case (w, s) => s + w }.mkString.drop(1) + trail
+    (0 until n).map(i => g.pureApply(Gen.Parameters.default, Seed(7000L + i)))
+  }
+
+  test("shingle sketch: signature and exact Jaccard == the shingle-string path") {
+    import graft.ops.MinHash
+    // plus long docs: thousands of shingles, most of them repeated
+    val gen = sketchDocs(120) ++ (0 until 4).map(i =>
+      Gen.listOfN(3000, Gen.oneOf(sketchPools.last)).map(_.mkString(" "))
+        .pureApply(Gen.Parameters.default, Seed(7500L + i)))
+    // near-dup partners: each doc minus its last token
+    val texts = gen ++ gen.map(d => d.substring(0, math.max(0, d.lastIndexOf(' ')))) ++
+      Seq("", " ", "a", "a b", "a  b", "a b c", "  a b c  ", "x x x x x x x",
+        "x x x x y x x x x", "a \uFFFDb c d", null)
+    // invalid UTF-8 (lone continuation, 0xFF, surrogate, overlong,
+    // truncated sequence, continuation-only tokens) cast from binary
+    val invalid = Seq("a \u0080b c d", "a \u0080b c e", "x y \u00ff z w",
+      "\u00ed\u00a0\u0080 q r s", "\u00c0\u00af a b c", "a b \u00e0\u00a4 c d",
+      "\u0080\u0080 \u0080\u0080 \u0080\u0080 \u0080").map(_.map(_.toByte).toArray)
+    val df = texts.toDF("text")
+      .unionByName(invalid.toDF("b").select($"b".cast("string").as("text")))
+      .withColumn("id", monotonically_increasing_id())
+      .select($"id", $"text", MinHash.sketch($"text", 3).as("sk"),
+        Text.shingleSet($"text", 3).as("sh"))
+      .localCheckpoint()
+    val badSig = df.filter(
+      !(MinHash.sketchSignature($"sk", 32) <=> MinHash.signature($"sh", 32)) ||
+        !(size($"sk") <=> size($"sh") * 2)).count()
+    assert(badSig == 0)
+    def side(s: String) = df.select(df.columns.map(c => col(c).as(s"${c}_$s")): _*)
+    val pairs = side("a").crossJoin(side("b")).filter($"id_a" <= $"id_b")
+      .select($"id_a", $"id_b",
+        MinHash.sketchJaccard($"sk_a", $"text_a", $"sk_b", $"text_b").as("got"),
+        Text.jaccard($"sh_a", $"sh_b").as("want"))
+      .localCheckpoint()
+    assert(pairs.filter(!($"got" <=> $"want")).count() == 0)
+    // not vacuous: partial overlaps, and invalid texts that match
+    // through their U+FFFD decoding
+    assert(pairs.filter($"want" > 0.0 && $"want" < 1.0).count() > 100)
+    val fffd = df.filter($"text" === "a \uFFFDb c d").select("id").as[Long].head()
+    assert(pairs.filter(($"id_a" === fffd || $"id_b" === fffd) && $"id_a" =!= $"id_b" &&
+      $"want" === 1.0).count() == 1)
+  }
+
+  test("sketch Jaccard: an equal fp over different bytes is not a match") {
+    import graft.ops.MinHash
+    def pos(start: Int, len: Int) = (start.toLong << 32) | len
+    def j(ta: String, a: Seq[Long], tb: String, b: Seq[Long]) =
+      Seq((ta, tb)).toDF("ta", "tb")
+        .select(MinHash.sketchJaccard(typedLit(a), $"ta", typedLit(b), $"tb"))
+        .as[Double].head()
+    // fp 5 is shared by "abc" and "abd": only "xyz" matches
+    assert(j("abc xyz", Seq(5L, pos(0, 3), 9L, pos(4, 3)),
+      "abd xyz", Seq(5L, pos(0, 3), 9L, pos(4, 3))) == 1.0 / 3)
+    // a two-shingle run against a one-shingle run: one byte match
+    assert(j("abc abd", Seq(5L, pos(0, 3), 5L, pos(4, 3)),
+      "abd", Seq(5L, pos(0, 3))) == 0.5)
+    // runs in different orders still pair up by bytes
+    assert(j("abc abd", Seq(5L, pos(0, 3), 5L, pos(4, 3)),
+      "abd abc", Seq(5L, pos(0, 3), 5L, pos(4, 3))) == 1.0)
+  }
+
   test("fused CollapseWs == regex trim+collapse composition") {
     val df = richDocs(300).toDF("text")
     val bad = df.filter(
