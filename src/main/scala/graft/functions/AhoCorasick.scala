@@ -33,22 +33,55 @@ object AhoCorasick {
   // `@transient lazy val trie` rebuilds the automaton ONCE PER TASK —
   // invisible on a 1-task scan stage, but profiled r14 at ~240 ms/task
   // of pure rebuild when the same funnel ran 32 tasks wide. Keyed by
-  // the keyword list (content equality); lexicons are a fixed small
-  // set, but cap the cache defensively so a pathological caller with
-  // unbounded distinct keyword sets degrades gracefully rather than
-  // leaking the executor heap. Overflow evicts ONE arbitrary entry
-  // (r14 ADVICE: clear() dropped every hot lexicon at once, and the
-  // check-then-clear raced under concurrent tasks into repeated full
-  // rebuilds of everything).
-  private val MaxEntries = 64
-  private val cache =
-    new java.util.concurrent.ConcurrentHashMap[IndexedSeq[String], AhoCorasick]()
-  def shared(keywords: IndexedSeq[String]): AhoCorasick = {
-    while (cache.size > MaxEntries) {
-      val it = cache.keySet.iterator
-      if (it.hasNext) { it.next(); it.remove() } // evict one, keep the rest
+  // the keyword list (content equality).
+  //
+  // Bounded by what the automata hold, not by how many there are: the
+  // dense ASCII table is states × 128 ints, so one large lexicon can
+  // outweigh many small ones. 2^23 cells (32 MB of tables) holds every
+  // shipped lexicon at once with room to spare.
+  private[graft] val MaxCells = 1L << 23
+  private val cache = new Cache(MaxCells)
+  def shared(keywords: IndexedSeq[String]): AhoCorasick = cache.get(keywords)
+
+  /** Automaton cache bounded by total dense-table cells. A build runs
+    * once per key (`computeIfAbsent`); admitting it evicts the oldest
+    * admitted entries until the total fits `maxCells` (r14 ADVICE: one
+    * overflow must not clear every hot lexicon at once). An automaton
+    * larger than the whole budget is returned but not kept. */
+  private[graft] final class Cache(maxCells: Long) {
+    private val map =
+      new java.util.concurrent.ConcurrentHashMap[IndexedSeq[String], AhoCorasick]()
+    // admitted entries in admission order, and their cell total; only
+    // touched under this cache's lock
+    private val admitted = new java.util.LinkedHashMap[IndexedSeq[String], Long]()
+    private var cells = 0L
+
+    def get(keywords: IndexedSeq[String]): AhoCorasick = {
+      val hit = map.get(keywords)
+      if (hit != null) return hit
+      var built: AhoCorasick = null
+      val ac = map.computeIfAbsent(keywords, kw => { built = new AhoCorasick(kw); built })
+      if (built != null) admit(keywords, built.denseCells)
+      ac
     }
-    cache.computeIfAbsent(keywords, kw => new AhoCorasick(kw))
+
+    private def admit(keywords: IndexedSeq[String], need: Long): Unit = synchronized {
+      if (need > maxCells) map.remove(keywords)
+      else {
+        val it = admitted.entrySet.iterator
+        while (cells + need > maxCells && it.hasNext) {
+          val e = it.next()
+          it.remove()
+          map.remove(e.getKey)
+          cells -= e.getValue
+        }
+        admitted.put(keywords, need)
+        cells += need
+      }
+    }
+
+    def totalCells: Long = synchronized(cells)
+    def size: Int = map.size
   }
 }
 
@@ -121,6 +154,9 @@ final class AhoCorasick(val keywords: IndexedSeq[String]) extends Serializable {
     }
     t
   }
+
+  /** Cells of the dense ASCII table (states × 128): the cache's unit. */
+  def denseCells: Long = asciiNext.length.toLong
 
   /** out(s) as arrays for an allocation-free hit loop. */
   private val outArr: Array[Array[Int]] = out.map(_.toArray).toArray

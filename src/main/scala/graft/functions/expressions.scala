@@ -532,15 +532,21 @@ object NonTerminalPuncSpanRemove {
   * — the count of codepoints NOT matching the class over all codepoints
   * — but as one byte scan with no regex engine and no rebuilt string.
   * In-class chars are single-byte ASCII, so a byte < 0x80 tests against
-  * a 128-entry table; a UTF-8 lead byte is one non-ASCII codepoint
-  * (in-class only for a negated class); continuation bytes count
-  * nothing. Only classes [[AsciiClassOutRatio.parse]] accepts route
-  * here — anything with escapes/Unicode stays on the regex form. */
+  * a 128-entry table; a well-formed multi-byte UTF-8 sequence is one
+  * non-ASCII codepoint (in-class only for a negated class). The same
+  * scan checks each sequence's well-formedness (Unicode Table 3-7); on
+  * the first malformed one (a stray continuation, an overlong, a
+  * surrogate, a truncated sequence) the row takes the regex form's
+  * value instead, since `length` then counts raw lead bytes while the
+  * regex sees U+FFFD replacements. Only classes
+  * [[AsciiClassOutRatio.parse]] accepts route here — anything with
+  * escapes/Unicode stays on the regex form. */
 case class AsciiClassOutRatio(child: Expression, classRegex: String)
     extends UnaryExpression {
   override def dataType: DataType = DoubleType
   @transient private lazy val (allowedAscii, nonAsciiAllowed) =
     AsciiClassOutRatio.parse(classRegex).get
+  @transient private lazy val pattern = java.util.regex.Pattern.compile(classRegex)
   override def nullSafeEval(input: Any): Any = compute(input)
 
   def compute(input: Any): Double = {
@@ -555,18 +561,24 @@ case class AsciiClassOutRatio(child: Expression, classRegex: String)
       if (x >= 0) {
         chars += 1
         if (!allowedAscii(x)) outC += 1
-      } else if ((x & 0xC0) != 0x80) { // lead byte = one non-ASCII cp
+        i += 1
+      } else {
+        val len = AsciiClassOutRatio.sequenceLength(u, i, n)
+        if (len == 0) return regexForm(u)
         chars += 1
         if (!nonAsciiAllowed) outC += 1
+        i += len
       }
-      i += 1
     }
-    // Only continuation bytes (never 0/0 = NaN): the regex form counts
-    // each as one char and sees each as one U+FFFD — out of the class
-    // unless the class is negated.
-    if (chars == 0) { if (nonAsciiAllowed) 0.0d else 1.0d }
-    else outC.toDouble / chars
+    outC.toDouble / chars
   }
+
+  /** The regex composition's value, for malformed input only: Spark's
+    * `regexp_replace` matches over the decoded Java String and
+    * re-encodes, `length` counts chars over the bytes it is given. */
+  private def regexForm(u: UTF8String): Double =
+    UTF8String.fromString(pattern.matcher(u.toString).replaceAll("")).numChars.toDouble /
+      u.numChars
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val ref = ctx.addReferenceObj("asciiClassOutRatio", this,
@@ -580,6 +592,25 @@ case class AsciiClassOutRatio(child: Expression, classRegex: String)
 }
 
 object AsciiClassOutRatio {
+  /** Length of the well-formed UTF-8 sequence whose lead byte (>= 0x80)
+    * is at `i` (Unicode Table 3-7: no overlongs, no surrogates, nothing
+    * past U+10FFFF), or 0 when it is malformed or cut off at `n`. */
+  def sequenceLength(u: UTF8String, i: Int, n: Int): Int = {
+    @inline def cont(j: Int, lo: Int, hi: Int): Boolean =
+      j < n && { val b = u.getByte(j) & 0xff; b >= lo && b <= hi }
+    val b0 = u.getByte(i) & 0xff
+    if (b0 >= 0xc2 && b0 <= 0xdf) { if (cont(i + 1, 0x80, 0xbf)) 2 else 0 }
+    else if (b0 >= 0xe0 && b0 <= 0xef) {
+      val lo = if (b0 == 0xe0) 0xa0 else 0x80
+      val hi = if (b0 == 0xed) 0x9f else 0xbf
+      if (cont(i + 1, lo, hi) && cont(i + 2, 0x80, 0xbf)) 3 else 0
+    } else if (b0 >= 0xf0 && b0 <= 0xf4) {
+      val lo = if (b0 == 0xf0) 0x90 else 0x80
+      val hi = if (b0 == 0xf4) 0x8f else 0xbf
+      if (cont(i + 1, lo, hi) && cont(i + 2, 0x80, 0xbf) && cont(i + 3, 0x80, 0xbf)) 4 else 0
+    } else 0
+  }
+
   /** Parse `[...]` / `[^...]` of literal ASCII chars and simple ranges
     * into (allowed-ASCII table, non-ASCII-allowed). None for anything
     * with escapes, nested classes, `&` (a `&&` intersection such as

@@ -17,38 +17,41 @@ import org.apache.spark.sql.functions._
 object ConnectedComponents {
 
   /** @param edges (src: long, dst: long) undirected edge list.
-    * @param smallGraphMax symmetrized-edge count at or under which the
-    *        component labels are computed by a driver-side union-find
-    *        instead of shuffle rounds. Dedup pair graphs are sparse
-    *        (LSH candidates, not the corpus), so this is the common
-    *        case; the bound keeps the collect at tens of MB. Pass 0 to
-    *        force the distributed path.
+    * @param smallGraphMax symmetrized-edge count (twice the edge count)
+    *        at or under which the component labels are computed by a
+    *        driver-side union-find instead of shuffle rounds. Dedup pair
+    *        graphs are sparse (LSH candidates, not the corpus), so this
+    *        is the common case; the bound keeps the collect at tens of
+    *        MB. Pass 0 to force the distributed path.
     * @return (id: long, component: long) where component = min node id
     *         reachable; isolated nodes of the edge list included. */
   def run(edges: DataFrame, maxIter: Int = 20,
       smallGraphMax: Long = 2000000L): DataFrame = {
-    // Materialize the edge list once — `edges` is usually a lazy plan
-    // (e.g. the whole MinHash pipeline) and every label round would
-    // otherwise re-execute it from the scan up. The edge COUNT rides
-    // the same materialization job via observe() (r15: the separate
-    // count() action was one more ~20 ms driver-fixed-latency job on a
-    // path the dbscan/dedup rows call once per solve — guide §1/7.3:
-    // driver gaps, not stages, dominate these rows at small scale).
+    // Materialize the edge list once, as given — `edges` is usually a
+    // lazy plan (e.g. the whole MinHash pipeline) and every label round
+    // would otherwise re-execute it from the scan up. Mirroring happens
+    // only from this checkpoint: a union of `edges` with its own mirror
+    // BEFORE the checkpoint would run the lazy plan twice in one job.
+    // The edge COUNT rides the same materialization job via observe()
+    // (r15: the separate count() action was one more ~20 ms
+    // driver-fixed-latency job on a path the dbscan/dedup rows call
+    // once per solve — guide §1/7.3: driver gaps, not stages, dominate
+    // these rows at small scale).
     val obs = org.apache.spark.sql.Observation()
-    val sym = edges.select(col("src"), col("dst"))
-      .unionAll(edges.select(col("dst").as("src"), col("src").as("dst")))
+    val mat = edges.select(col("src"), col("dst"))
       .observe(obs, count(lit(1)).as("n"))
       .localCheckpoint()
-    val symCount = obs.get("n").asInstanceOf[Long]
+    val edgeCount = obs.get("n").asInstanceOf[Long]
 
-    // Small-graph fast path: one bounded collect + union-find replaces
-    // ~2·log(d) shuffle rounds with their per-round actions and
-    // checkpoints — identical output (min reachable id, order-free).
-    // This is one of the repo's documented bounded collects; the
-    // distributed min-label + pointer-jumping loop below remains the
-    // 100 TB route.
-    if (symCount <= smallGraphMax) return unionFindLocal(sym)
+    // Small-graph fast path: one bounded collect of the unmirrored
+    // edges + union-find replaces ~2·log(d) shuffle rounds with their
+    // per-round actions and checkpoints — identical output (min
+    // reachable id, order-free). This is one of the repo's documented
+    // bounded collects; the distributed min-label + pointer-jumping
+    // loop below remains the 100 TB route.
+    if (2 * edgeCount <= smallGraphMax) return unionFindLocal(mat)
 
+    val sym = mat.unionAll(mat.select(col("dst").as("src"), col("src").as("dst")))
     var labels = sym.select(col("src").as("id")).distinct()
       .withColumn("component", col("id"))
       .localCheckpoint()
@@ -145,11 +148,12 @@ object ConnectedComponents {
       .unionAll(resolved.select(col("id"), col("component")))
   }
 
-  /** Driver-side union-find over a bounded symmetrized edge list —
-    * union-by-min with full path compression, so every root is its
-    * component's minimum id and the result is edge-order-independent. */
-  private def unionFindLocal(sym: DataFrame): DataFrame = {
-    val sp = sym.sparkSession
+  /** Driver-side union-find over a bounded edge list (an undirected
+    * edge once is enough) — union-by-min with full path compression, so
+    * every root is its component's minimum id and the result is
+    * edge-order-independent. */
+  private def unionFindLocal(edges: DataFrame): DataFrame = {
+    val sp = edges.sparkSession
     import sp.implicits._
     val parent = new java.util.HashMap[Long, Long]()
     def find(x: Long): Long = {
@@ -159,7 +163,7 @@ object ConnectedComponents {
       while (c != r) { val n = parent.get(c); parent.put(c, r); c = n }
       r
     }
-    sym.select(col("src"), col("dst")).as[(Long, Long)].collect()
+    edges.select(col("src"), col("dst")).as[(Long, Long)].collect()
       .foreach { case (s, d) =>
         parent.putIfAbsent(s, s)
         parent.putIfAbsent(d, d)

@@ -13,22 +13,26 @@ import org.apache.spark.sql.functions._
   * parity (DuckDB replays it with HUGEINT modulo).
   *
   * Shingle sketches ([[candidatePairs]], [[candidatePairsFromSets]]):
-  * a document's word-shingle set travels as a [[sketch]] — one
-  * `array<long>` of (fp, pos) pairs sorted by fp, where fp is the same
-  * 60-bit h(s) and pos packs the (start, byte length) of the shingle's
-  * slice of the text — next to the text itself, never as shingle
-  * strings. Contract:
-  *   - [[sketchSignature]] over the sketch is bit-identical to
-  *     [[signature]] over `Text.shingleSet(text, n)`, so bands (and the
-  *     persisted [[lshState]] buckets) line up with the string form.
-  *   - Verification is EXACT: [[sketchJaccard]] merges the two fp
-  *     arrays and confirms every equal-fp run by comparing the text
-  *     bytes, so the `jaccard` column is the same integer ratio
-  *     `Text.jaccard` gives over the shingle strings (and the DuckDB
-  *     oracles replay) even under a 60-bit fingerprint collision.
+  * a document's word-shingle set travels as a [[sketch]] next to the
+  * text itself, never as shingle strings or hashes. A sketch is one
+  * `array<int>`: a header (shingle size, and whether the offsets index
+  * the text's U+FFFD re-encoding), then the byte offset where each
+  * distinct shingle starts, in the shingle's unsigned byte order —
+  * 4 B per distinct shingle. Contract:
+  *   - [[textSignature]] over the text and its sketch is
+  *     bit-identical to [[signature]] over `Text.shingleSet(text, n)`,
+  *     so bands (and the persisted [[lshState]] buckets) line up with
+  *     the string form.
+  *   - The sketch's slices, decoded, are `sort_array(Text.shingleSet(
+  *     text, n))` element by element.
+  *   - Verification is EXACT: [[sketchJaccard]] merges the two offset
+  *     arrays in byte order and compares the slices' bytes, so the
+  *     `jaccard` column is the same integer ratio `Text.jaccard` gives
+  *     over the shingle strings (and the DuckDB oracles replay).
   *   - Invalid UTF-8 behaves as in the string path (tokens come from
-  *     the text's Java-String round trip).
-  * A sketch costs 16 B per distinct shingle plus the text it indexes.
+  *     the text's Java-String round trip). Validity is decided once per
+  *     document, when the sketch is built; the verify re-encodes only
+  *     the texts whose header says so and validates none.
   *
   * Scale design: signatures/bands are per-row computations (no
   * shuffle); candidate generation is bucket-local (see [[Buckets]]) —
@@ -52,10 +56,13 @@ object MinHash {
       graft.functions.ShingleSketch(
         org.apache.spark.sql.graft.bridge.expression(text), shingleSize))
 
-  /** [[signature]] over a [[sketch]] (bit-identical, no md5). */
-  def sketchSignature(sk: Column, numPerm: Int): Column =
+  /** [[signature]] over `Text.shingleSet(text, n)`, computed from the
+    * text and its [[sketch]] `sk` (bit-identical; no shingle strings). n
+    * is read from the sketch's header. */
+  def textSignature(text: Column, sk: Column, numPerm: Int): Column =
     org.apache.spark.sql.graft.bridge.column(
-      graft.functions.SketchSignature(
+      graft.functions.TextSignature(
+        org.apache.spark.sql.graft.bridge.expression(text),
         org.apache.spark.sql.graft.bridge.expression(sk), numPerm))
 
   /** Exact shingle-set Jaccard of two texts from their sketches. */
@@ -121,13 +128,14 @@ object MinHash {
   }
 
   /** [[candidatePairs]] over ALREADY-MATERIALIZED (id, text, sk
-    * [, blockCols]) rows, `sk` the non-empty [[sketch]] of `text`: a
-    * caller that must checkpoint its input anyway (the pipeline's fuzzy
-    * stage materializes the funnel output for its final anti-join) can
-    * carry the sketch in that ONE checkpoint instead of paying a second
-    * materialization barrier here. `sets` must be cheap to re-scan
-    * (checkpointed/parquet): the banding path and both verify join
-    * sides each consume it. */
+    * [, blockCols]) rows, `sk` the non-empty [[sketch]] of `text` (its
+    * header carries the shingle size): a caller that must checkpoint
+    * its input anyway (the pipeline's fuzzy stage materializes the
+    * funnel output for its final anti-join) can carry the sketch in
+    * that ONE checkpoint instead of paying a second materialization
+    * barrier here. `sets` must be cheap to re-scan (checkpointed/
+    * parquet): the banding path (signatures from the text) and both
+    * verify join sides each consume it. */
   def candidatePairsFromSets(
       sets: DataFrame,
       numPerm: Int = 32,
@@ -139,7 +147,7 @@ object MinHash {
     require(bands * rowsPerBand == numPerm, "bands must divide numPerm")
 
     val banded = sets
-      .withColumn("sig", sketchSignature(col("sk"), numPerm))
+      .withColumn("sig", textSignature(col("text"), col("sk"), numPerm))
       .select((col("id") +:
         posexplode(bandKeys(col("sig"), bands, rowsPerBand)).as(Seq("band", "key"))
         +: blockCols.map(col)): _*)

@@ -213,7 +213,7 @@ class Pipeline(spark: SparkSession, cfg: PipelineConfig) {
       // anti-join consume `df`, and without this the whole upstream
       // clean→stats→flag→window chain executes TWICE per run. Under
       // checkpointRoot the input is already a parquet re-read.
-      // The ONE checkpoint also carries the shingle sketch (`_sk`, 16 B
+      // The ONE checkpoint also carries the shingle sketch (`_sk`, 4 B
       // per shingle beside the text it indexes), so MinHash's pair build
       // reads it instead of paying its own second materialization
       // barrier; `_sk` is dropped before the stage returns, so the

@@ -113,6 +113,24 @@ class DedupSpec extends AnyFunSuite {
     assert(localComp == comp)
   }
 
+  test("connected components executes its edge plan once, on both paths") {
+    // the edges are the lazy LSH verify plan; a non-deterministic tap
+    // on src counts every row that plan emits
+    val docs = spark.read.parquet(s"${TestSpark.Sf}/documents.parquet")
+    val pairs = MinHash.candidatePairs(docs, "doc_id", "text", threshold = 0.5)
+    val n = pairs.count()
+    assert(n > 0)
+    for (smallGraphMax <- Seq(2000000L, 0L)) {
+      val acc = spark.sparkContext.longAccumulator(s"cc_edges_$smallGraphMax")
+      val tap = udf((x: Long) => { acc.add(1); x }).asNondeterministic()
+      val edges = pairs.select(tap($"id_a").as("src"), $"id_b".as("dst"))
+      val labels = ConnectedComponents.run(edges, smallGraphMax = smallGraphMax)
+      assert(acc.value == n, s"smallGraphMax=$smallGraphMax: ${acc.value} edge rows for $n edges")
+      labels.collect()
+      assert(acc.value == n, s"smallGraphMax=$smallGraphMax: labels re-ran the edge plan")
+    }
+  }
+
   test("connected components: empty edge list returns empty, no NPE") {
     val edges = Seq.empty[(Long, Long)].toDF("src", "dst")
     assert(ConnectedComponents.run(edges).count() == 0)

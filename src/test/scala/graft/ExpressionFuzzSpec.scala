@@ -136,7 +136,7 @@ class ExpressionFuzzSpec extends AnyFunSuite {
       val base = spark.read.parquet(fuzzPath)
       base.select(col("t"), col("u"),
         MinHash.sketch(col("t"), 3).as("sk3"), MinHash.sketch(col("u"), 1).as("sk1"),
-        MinHash.sketchSignature(MinHash.sketch(col("t"), 3), 8).as("sig"),
+        MinHash.textSignature(col("t"), MinHash.sketch(col("t"), 3), 8).as("sig"),
         MinHash.sketchJaccard(MinHash.sketch(col("t"), 2), col("t"),
           MinHash.sketch(col("u"), 2), col("u")).as("jac"))
     }

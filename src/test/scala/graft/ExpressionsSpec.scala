@@ -322,6 +322,36 @@ class ExpressionsSpec extends AnyFunSuite {
     }
   }
 
+  test("charClassOutRatio on mixed invalid UTF-8 == regex form") {
+    import graft.ops.Text
+    import org.scalacheck.Gen
+    // ASCII, well-formed multi-byte sequences, and malformed ones: stray
+    // continuations, bytes never in UTF-8, overlongs, surrogates, past
+    // U+10FFFF, and sequences cut short
+    val pieces = Seq(Seq(0x61), Seq(0x20), Seq(0x39), Seq(0x41), Seq(0x7a),
+      Seq(0xc3, 0xa9), Seq(0xe0, 0xa4, 0xa8), Seq(0xf0, 0x90, 0x8d, 0x88),
+      Seq(0x80), Seq(0xbf), Seq(0xff), Seq(0xfe),
+      Seq(0xc0, 0xaf), Seq(0xc1, 0x81), Seq(0xe0, 0x80, 0xaf), Seq(0xf0, 0x80, 0x80, 0xaf),
+      Seq(0xed, 0xa0, 0x80), Seq(0xed, 0xbf, 0xbf), Seq(0xf4, 0x90, 0x80, 0x80),
+      Seq(0xf5, 0x80, 0x80, 0x80), Seq(0xc3), Seq(0xe0, 0xa4), Seq(0xf0, 0x90, 0x8d))
+    val gen = Gen.listOf(Gen.oneOf(pieces)).map(_.flatten.map(_.toByte).toArray)
+    val docs = Seq(Seq(0x61, 0x80), Seq(0x80, 0x61), Seq(0x61, 0xc3), Seq(0xe0, 0xa4, 0x61))
+      .map(_.map(_.toByte).toArray) ++
+      (0 until 400).map(i => gen.pureApply(Gen.Parameters.default, org.scalacheck.rng.Seed(i)))
+    val df = docs.toDF("b").select($"b".cast("string").as("t"), $"b")
+    def valid(b: Array[Byte]) = scala.util.Try(java.nio.charset.StandardCharsets.UTF_8
+      .newDecoder().decode(java.nio.ByteBuffer.wrap(b))).isSuccess
+    assert(docs.count(!valid(_)) > 300, "most inputs must be malformed")
+    for (cls <- Seq("[a-z ]", "[a-z]", "[^0-9]", "[A-Z0-9]")) {
+      assert(graft.functions.AsciiClassOutRatio.parse(cls).isDefined, cls)
+      df.select(Text.charClassOutRatio($"t", cls), Text.charClassOutRatioRegex($"t", cls), $"b")
+        .as[(Double, Double, Array[Byte])].collect().foreach { case (fused, regex, b) =>
+          assert(fused == regex,
+            s"class=$cls bytes=${b.map(_ & 0xff).mkString(",")} fused=$fused regex=$regex")
+        }
+    }
+  }
+
   test("charClassOutRatio: an && intersection class stays on the regex path") {
     import graft.ops.Text
     assert(graft.functions.AsciiClassOutRatio.parse("[a&&b]").isEmpty)

@@ -51,11 +51,40 @@ class OptimizationR15Spec extends AnyFunSuite {
     (0 until 80).foreach { i =>
       AhoCorasick.shared(IndexedSeq(s"junk$i"))
     }
-    // the hot key may or may not have been the unlucky eviction, but
-    // repeated gets must converge to a stable instance (no clear-storm)
+    // 80 one-word lexicons are far below the cells budget, so nothing
+    // is evicted: the hot key keeps its instance (no clear-storm)
     val again = AhoCorasick.shared(hot)
     assert(AhoCorasick.shared(hot) eq again)
-    assert((first eq again) || true) // instance identity is best-effort
+    assert(first eq again)
+  }
+
+  test("AhoCorasick cache is bounded by dense-table cells, not entry count") {
+    def kw(i: Int) = IndexedSeq(f"w$i%03dabcdefgh")
+    val one = new AhoCorasick(kw(0)).denseCells
+    val budget = 2 * one + one / 2
+    val cache = new AhoCorasick.Cache(budget)
+    val a0 = cache.get(kw(0))
+    val a1 = cache.get(kw(1))
+    assert(cache.totalCells == 2 * one && cache.size == 2)
+    assert(cache.get(kw(0)) eq a0, "a cached lexicon is a hit")
+    // a third does not fit: the oldest goes, the others stay
+    val a2 = cache.get(kw(2))
+    assert(cache.totalCells == 2 * one && cache.size == 2)
+    assert((cache.get(kw(1)) eq a1) && (cache.get(kw(2)) eq a2))
+    // a lexicon larger than the whole budget is built and returned but
+    // not kept, and evicts nothing
+    val big = (0 until 20).map(i => ('a' + i).toChar.toString * 6)
+    assert(new AhoCorasick(big).denseCells > budget)
+    val b = cache.get(big)
+    assert(b.countMatches("aaaaaa bbbbbb cccccc").sum == 3)
+    assert(!(cache.get(big) eq b) && cache.size == 2 && (cache.get(kw(2)) eq a2))
+    // churn through many lexicons never exceeds the budget
+    (100 until 300).foreach { i => cache.get(kw(i)); assert(cache.totalCells <= budget) }
+    // the executor-wide cache holds every shipped lexicon at once
+    import graft.sources.Lexicons
+    val shipped = Lexicons.languages.flatMap(l => Seq(Lexicons.nsfw(l), Lexicons.stopwords(l))) ++
+      Seq(Lexicons.nsfwUnion(), Lexicons.stopwordUnion())
+    assert(shipped.map(l => new AhoCorasick(l.toIndexedSeq).denseCells).sum <= AhoCorasick.MaxCells)
   }
 
   test("WordNgramRepScore interned-window count == string-keyed reference") {

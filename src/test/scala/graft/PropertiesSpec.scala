@@ -49,16 +49,81 @@ class PropertiesSpec extends AnyFunSuite {
   }
 
   // Shingle-sketch pins: words from ASCII, the shipped Devanagari /
-  // Bengali / Tamil stopword lexicons, astral-plane codepoints, and a
-  // mix; small pools so shingles repeat inside a doc and overlap across
-  // docs; single and double spaces plus leading/trailing ones (empty
-  // tokens).
+  // Bengali / Tamil stopword lexicons, astral-plane codepoints, tokens
+  // holding \n, \t, NUL and other bytes below 0x20, and a mix; small
+  // pools so shingles repeat inside a doc and overlap across docs;
+  // single and double spaces plus leading/trailing ones (empty tokens).
   private lazy val sketchPools: Seq[Seq[String]] = {
     import graft.sources.Lexicons
     val pools = Seq(Seq("the", "a", "fox", "dog", "river", "x"),
       Lexicons.stopwords("hindi").take(6), Lexicons.stopwords("bengali").take(6),
-      Lexicons.stopwords("tamil").take(6), Seq("𐍈", "𝔘𝔫𝔦", "😀x", "a𐌰b"))
+      Lexicons.stopwords("tamil").take(6), Seq("𐍈", "𝔘𝔫𝔦", "😀x", "a𐌰b"),
+      Seq("a\nb", "\t", "x\u0001", "\u001f\u007f", "\u0000", "a", "q\r"))
     pools :+ pools.flatMap(_.take(2))
+  }
+
+  /** Texts for the sketch properties: generated docs, long docs
+    * (thousands of shingles, most repeated), near-dup partners (each
+    * doc minus its last token), edge cases, and invalid UTF-8 (lone
+    * continuation, 0xFF, surrogate, overlong, truncated sequence,
+    * continuation-only tokens) cast from binary. */
+  private def sketchTexts(): org.apache.spark.sql.DataFrame = {
+    val gen = sketchDocs(120) ++ (0 until 4).map(i =>
+      Gen.listOfN(3000, Gen.oneOf(sketchPools.last)).map(_.mkString(" "))
+        .pureApply(Gen.Parameters.default, Seed(7500L + i)))
+    val texts = gen ++ gen.map(d => d.substring(0, math.max(0, d.lastIndexOf(' ')))) ++
+      Seq("", " ", "a", "a b", "a  b", "a b c", "  a b c  ", "x x x x x x x",
+        "x x x x y x x x x", "a \uFFFDb c d", null)
+    val invalid = Seq("a \u0080b c d", "a \u0080b c e", "x y \u00ff z w",
+      "\u00ed\u00a0\u0080 q r s", "\u00c0\u00af a b c", "a b \u00e0\u00a4 c d",
+      "\u0080\u0080 \u0080\u0080 \u0080\u0080 \u0080").map(_.map(_.toByte).toArray)
+    texts.toDF("text")
+      .unionByName(invalid.toDF("b").select($"b".cast("string").as("text")))
+      .withColumn("id", monotonically_increasing_id())
+  }
+
+  /** The shingle strings a sketch names, in sketch order: each offset's
+    * slice of the raw text (or of its U+FFFD re-encoding when the
+    * header says so), ending at the n-th space at or after it. */
+  private def decodeSketch(raw: Array[Byte], sk: Seq[Int]): Seq[String] = {
+    val n = sk.head >>> 1
+    val bytes =
+      if ((sk.head & 1) == 1) new String(raw, "UTF-8").getBytes("UTF-8") else raw
+    sk.tail.map { s =>
+      var e = s
+      var spaces = 0
+      while (e < bytes.length && (bytes(e) != ' ' || { spaces += 1; spaces < n })) e += 1
+      new String(bytes, s, e - s, "UTF-8")
+    }
+  }
+
+  private def validUtf8(raw: Array[Byte]): Boolean =
+    scala.util.Try(java.nio.charset.StandardCharsets.UTF_8.newDecoder()
+      .decode(java.nio.ByteBuffer.wrap(raw))).isSuccess
+
+  test("shingle sketch: decoded slices == sort_array(Text.shingleSet), header == (n, validity)") {
+    import graft.ops.MinHash
+    val df = sketchTexts().filter($"text".isNotNull).localCheckpoint()
+    for (n <- Seq(1, 2, 3)) {
+      val rows = df.select($"text".cast("binary"), MinHash.sketch($"text", n),
+          sort_array(Text.shingleSet($"text", n)))
+        .as[(Array[Byte], Seq[Int], Seq[String])].collect()
+      var nonEmpty = 0
+      var reencoded = 0
+      for ((raw, sk, want) <- rows) {
+        val ctx = s"n=$n text=${raw.map(_ & 0xff).mkString(",")}"
+        if (want.isEmpty) assert(sk.isEmpty, ctx)
+        else {
+          nonEmpty += 1
+          assert(sk.head >>> 1 == n, ctx)
+          assert(((sk.head & 1) == 1) == !validUtf8(raw), ctx)
+          if ((sk.head & 1) == 1) reencoded += 1
+          assert(decodeSketch(raw, sk) == want, ctx)
+        }
+      }
+      // not vacuous: most texts sketch, and the invalid ones re-encode
+      assert(nonEmpty > 200 && reencoded == 7, s"n=$n nonEmpty=$nonEmpty reencoded=$reencoded")
+    }
   }
   private def sketchDocs(n: Int): Seq[String] = {
     val g = for {
@@ -74,28 +139,13 @@ class PropertiesSpec extends AnyFunSuite {
 
   test("shingle sketch: signature and exact Jaccard == the shingle-string path") {
     import graft.ops.MinHash
-    // plus long docs: thousands of shingles, most of them repeated
-    val gen = sketchDocs(120) ++ (0 until 4).map(i =>
-      Gen.listOfN(3000, Gen.oneOf(sketchPools.last)).map(_.mkString(" "))
-        .pureApply(Gen.Parameters.default, Seed(7500L + i)))
-    // near-dup partners: each doc minus its last token
-    val texts = gen ++ gen.map(d => d.substring(0, math.max(0, d.lastIndexOf(' ')))) ++
-      Seq("", " ", "a", "a b", "a  b", "a b c", "  a b c  ", "x x x x x x x",
-        "x x x x y x x x x", "a \uFFFDb c d", null)
-    // invalid UTF-8 (lone continuation, 0xFF, surrogate, overlong,
-    // truncated sequence, continuation-only tokens) cast from binary
-    val invalid = Seq("a \u0080b c d", "a \u0080b c e", "x y \u00ff z w",
-      "\u00ed\u00a0\u0080 q r s", "\u00c0\u00af a b c", "a b \u00e0\u00a4 c d",
-      "\u0080\u0080 \u0080\u0080 \u0080\u0080 \u0080").map(_.map(_.toByte).toArray)
-    val df = texts.toDF("text")
-      .unionByName(invalid.toDF("b").select($"b".cast("string").as("text")))
-      .withColumn("id", monotonically_increasing_id())
+    val df = sketchTexts()
       .select($"id", $"text", MinHash.sketch($"text", 3).as("sk"),
         Text.shingleSet($"text", 3).as("sh"))
       .localCheckpoint()
     val badSig = df.filter(
-      !(MinHash.sketchSignature($"sk", 32) <=> MinHash.signature($"sh", 32)) ||
-        !(size($"sk") <=> size($"sh") * 2)).count()
+      !(MinHash.textSignature($"text", $"sk", 32) <=> MinHash.signature($"sh", 32)) ||
+        !(size($"sk") <=> when(size($"sh") > 0, size($"sh") + 1).otherwise(size($"sh")))).count()
     assert(badSig == 0)
     def side(s: String) = df.select(df.columns.map(c => col(c).as(s"${c}_$s")): _*)
     val pairs = side("a").crossJoin(side("b")).filter($"id_a" <= $"id_b")
@@ -112,22 +162,34 @@ class PropertiesSpec extends AnyFunSuite {
       $"want" === 1.0).count() == 1)
   }
 
-  test("sketch Jaccard: an equal fp over different bytes is not a match") {
+  test("shingle sketch byte order: a prefix sorts first, high bytes after ASCII") {
     import graft.ops.MinHash
-    def pos(start: Int, len: Int) = (start.toLong << 32) | len
-    def j(ta: String, a: Seq[Long], tb: String, b: Seq[Long]) =
-      Seq((ta, tb)).toDF("ta", "tb")
-        .select(MinHash.sketchJaccard(typedLit(a), $"ta", typedLit(b), $"tb"))
-        .as[Double].head()
-    // fp 5 is shared by "abc" and "abd": only "xyz" matches
-    assert(j("abc xyz", Seq(5L, pos(0, 3), 9L, pos(4, 3)),
-      "abd xyz", Seq(5L, pos(0, 3), 9L, pos(4, 3))) == 1.0 / 3)
-    // a two-shingle run against a one-shingle run: one byte match
-    assert(j("abc abd", Seq(5L, pos(0, 3), 5L, pos(4, 3)),
-      "abd", Seq(5L, pos(0, 3))) == 0.5)
-    // runs in different orders still pair up by bytes
-    assert(j("abc abd", Seq(5L, pos(0, 3), 5L, pos(4, 3)),
-      "abd abc", Seq(5L, pos(0, 3), 5L, pos(4, 3))) == 1.0)
+    def sk(text: String, n: Int): Seq[Int] =
+      Seq(text).toDF("t").select(MinHash.sketch($"t", n)).as[Seq[Int]].head()
+    // "a"@3 < "ab"@0 < "abc"@5: a slice that ends sorts before any byte
+    assert(sk("ab a abc", 1) == Seq(1 << 1, 3, 0, 5))
+    // z(7A) < ~(7E) < DEL(7F) < é(C3 A9): bytes compare unsigned
+    assert(sk("é z ~ \u007f", 1) == Seq(1 << 1, 3, 5, 7, 0))
+    // the first difference inside and after the first 8-byte word
+    assert(sk("abcdefgé abcdefgzz", 1) == Seq(1 << 1, 10, 0))
+    assert(sk("abcdefghé abcdefghz", 1) == Seq(1 << 1, 11, 0))
+    // a NUL byte sorts after the end of the shorter slice; equal
+    // slices keep the first occurrence
+    assert(sk("a\u0000 a a", 1) == Seq(1 << 1, 3, 0))
+    // shingles of 3 whose first 4 bytes agree
+    assert(sk("the cat sat the cat sa", 3) == Seq(3 << 1, 4, 8, 12, 0))
+    val texts = Seq("a ab", "ab abc", "é z", "z é", "é", "e", "abcdefgé abcdefgzz",
+      "abcdefgzz abcdefgé", "abcdefghé", "abcdefghz", "the cat sat", "the cat sa")
+    val df = texts.toDF("text").withColumn("id", monotonically_increasing_id())
+      .select($"id", $"text", MinHash.sketch($"text", 1).as("sk"),
+        Text.shingleSet($"text", 1).as("sh"))
+    def side(s: String) = df.select(df.columns.map(c => col(c).as(s"${c}_$s")): _*)
+    val got = side("a").crossJoin(side("b"))
+      .select(MinHash.sketchJaccard($"sk_a", $"text_a", $"sk_b", $"text_b"),
+        Text.jaccard($"sh_a", $"sh_b"))
+      .as[(Double, Double)].collect()
+    assert(got.forall { case (g, w) => g == w })
+    assert(got.count(_._1 == 1.0 / 3) >= 2 && got.count(_._1 == 1.0) > texts.size)
   }
 
   test("fused CollapseWs == regex trim+collapse composition") {
